@@ -401,8 +401,8 @@ def main() -> None:
     # The driver captures only the TAIL of stdout (~2 kB), so the
     # emitted line must stay compact: per-query bests at 1 dp plus the
     # guard booleans. Everything else (median/spread stats, scaling and
-    # index-scaling detail, 3-dp timings) goes to BENCH_DETAIL.json
-    # next to this script.
+    # index-scaling detail, 3-dp timings) goes to the run's own
+    # bench_runs/<run>/BENCH_DETAIL.json next to this script.
     la1s = sorted(s["la1"] for s in stats.values())
     out = {
         "metric": "headline_queries_total_wall",
@@ -431,9 +431,16 @@ def main() -> None:
     if bm25_zipf:
         out["bm25_zipf_ok"] = bm25_zipf["ok"]
         detail["bm25_zipf"] = bm25_zipf
-    detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BENCH_DETAIL.json")
-    with open(detail_path, "w") as fh:
+    # Each run's detail goes to its own git-ignored directory, so a run
+    # never rewrites a committed capture; committing one is a deliberate
+    # copy of that run's file.
+    run_dir = os.path.join(
+        "bench_runs", time.strftime("%Y%m%dT%H%M%SZ", time.gmtime()) + f"-{os.getpid()}"
+    )
+    detail_rel = os.path.join(run_dir, "BENCH_DETAIL.json")
+    here = os.path.dirname(os.path.abspath(__file__))
+    os.makedirs(os.path.join(here, run_dir), exist_ok=True)
+    with open(os.path.join(here, detail_rel), "w") as fh:
         json.dump({**out, **detail}, fh, indent=1)
     line = json.dumps(out, separators=(",", ":"))
     if len(line) > 1900:  # stay inside the driver's 2 kB tail capture
@@ -441,7 +448,7 @@ def main() -> None:
             k: round(v, 1)
             for k, v in sorted(timings.items(), key=lambda kv: -kv[1])[:30]
         }
-        out["queries_truncated_see"] = "BENCH_DETAIL.json"
+        out["queries_truncated_see"] = detail_rel
         line = json.dumps(out, separators=(",", ":"))
     print(line)
     spark.stop()

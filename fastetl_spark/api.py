@@ -23,7 +23,13 @@ from pyspark.sql import functions as F
 
 from fastetl_spark.checkpointing import materialize
 from fastetl_spark.io.readers import read_jdbc
-from fastetl_spark.io.writers import atomic_overwrite, select_intersection, write_csv
+from fastetl_spark.io.writers import (
+    atomic_overwrite,
+    local_rows,
+    read_parquet_if_exists,
+    select_intersection,
+    write_csv,
+)
 from fastetl_spark.meta.load_info import LoadInfo
 from fastetl_spark.operators.sync import incremental_sync, merge_upsert
 from fastetl_spark.plans.qa import CleaningPipeline
@@ -200,8 +206,6 @@ class Engine:
             # first run against a not-yet-created destination: the
             # initial full load IS the sync (mirrors the delta branch's
             # is_delta_table probe — ADVICE r3)
-            from fastetl_spark.io.writers import read_parquet_if_exists
-
             dest_df = read_parquet_if_exists(self.spark, dest["path"])
             if dest_df is None:
                 n = atomic_overwrite(src_df, dest["path"])
@@ -282,8 +286,8 @@ class Engine:
                 if fail_fast:
                     raise
                 rows.append((name, None, "error", f"{type(e).__name__}: {e}"))
-        return self.spark.createDataFrame(
-            rows, "table string, rows_merged long, status string, error string"
+        return local_rows(
+            self.spark, rows, "table string, rows_merged long, status string, error string"
         )
 
     def expectations(self, df: DataFrame, rules: list) -> DataFrame:

@@ -69,6 +69,7 @@ from fastetl_spark.io.fsutil import (
     replace_text_file,
     write_text_file,
 )
+from fastetl_spark.io.writers import local_rows
 
 BUCKET_COL = "__fe_bucket"
 SPEC_FILE = "_bucket_spec.json"
@@ -287,7 +288,7 @@ def write_bucketed(
         buckets[b] = dirname
     if not buckets:
         # zero-row initial load: keep one schema-bearing empty bucket
-        empty = df.sparkSession.createDataFrame([], df.schema)
+        empty = local_rows(df.sparkSession, [], df.schema)
         empty.write.mode("overwrite").parquet(f"{base}/bucket_0_v{gen}")
         buckets[0] = f"bucket_0_v{gen}"
     fs.delete(path_cls(staging), True)
@@ -594,7 +595,7 @@ def _partial_merge_locked_v2(
     if not new_buckets:
         # destination fully emptied: keep one schema-bearing empty dir
         dirname = f"bucket_0_v{next_gen}"
-        empty = spark.createDataFrame([], merged.schema)
+        empty = local_rows(spark, [], merged.schema)
         empty.write.mode("overwrite").parquet(f"{base}/{dirname}")
         new_buckets[0] = dirname
     _commit_manifest(spark, path, next_gen, new_buckets, shards=m.get("shards"))
@@ -674,7 +675,7 @@ def _partial_merge_locked(
         if s.isDirectory() and s.getPath().getName().startswith(f"{BUCKET_COL}=")
     ]
     if not remaining:
-        empty = spark.createDataFrame([], merged.drop(BUCKET_COL).schema)
+        empty = local_rows(spark, [], merged.drop(BUCKET_COL).schema)
         empty.write.mode("overwrite").parquet(f"{path.rstrip('/')}/{BUCKET_COL}=0")
     return {
         "n_buckets": n_buckets,

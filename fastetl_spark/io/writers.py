@@ -11,8 +11,11 @@ Replaces the reference's insert paths:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from fastetl_spark.io.fsutil import hadoop_fs
 
 
 def select_intersection(df: DataFrame, dest_columns: list[str]) -> DataFrame:
@@ -70,20 +73,36 @@ def write_jdbc(df: DataFrame, mode: str = "append", **options) -> None:
     df.write.format("jdbc").options(**write_jdbc_options(**options)).mode(mode).save()
 
 
-def read_parquet_if_exists(spark, path: str) -> DataFrame | None:
-    """Read a parquet destination, returning None ONLY when the path is
-    absent. Any other failure (corrupt files, permission, transient IO)
-    propagates — callers that treated every read error as "first run"
-    would silently overwrite previously merged data."""
-    from pyspark.errors import AnalysisException
+def local_rows(spark: SparkSession, rows: list[tuple], schema: StructType | str) -> DataFrame:
+    """A small driver-built frame (control rows, reports, schema-bearing
+    empties) that plans as a ``LocalTableScan``.
 
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        msg = str(e)
-        if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-            return None
-        raise
+    ``createDataFrame(<list>)`` pickles the rows into a Python RDD that
+    plans as ``Scan ExistingRDD`` and starts Python workers to decode
+    them; an Arrow table typed by the same schema is shipped to the JVM
+    once and keeps the schema's types and nullability, with no Python
+    worker anywhere in the plan."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, row)) for row in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def read_parquet_if_exists(spark: SparkSession, path: str, **options) -> DataFrame | None:
+    """Read a parquet destination, returning None ONLY when the path is
+    absent. The absence is probed on the filesystem, so any read failure
+    (corrupt files, permission, transient IO) propagates — callers that
+    treated every read error as "first run" would silently overwrite
+    previously merged data. ``options`` go to the reader."""
+    fs, path_cls = hadoop_fs(spark, path)
+    if not fs.exists(path_cls(path)):
+        return None
+    return spark.read.options(**options).parquet(path)
 
 
 def atomic_overwrite(df: DataFrame, dest_path: str) -> int:

@@ -3,7 +3,14 @@
 The reference creates a `consumo_dados` table on the destination and
 inserts one row per load (vdb, schema, table, user, load_type,
 timestamp, row count). Here the log is an append-only parquet metrics
-table with the same schema, written as a one-row DataFrame.
+table with the same schema: each `save` appends one parquet file
+holding one row.
+
+The row is built on the driver as an Arrow table (`io.writers.local_rows`)
+and plans as a `LocalTableScan`; `dt_consumo` is `current_timestamp()`.
+Building it from a Python list instead would plan as `Scan ExistingRDD`
+over a pickled RDD and start Python workers just to append one row —
+on a small incremental sync that bookkeeping cost more than the merge.
 """
 
 from __future__ import annotations
@@ -12,6 +19,8 @@ import getpass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from fastetl_spark.io.writers import local_rows
 
 LOG_SCHEMA = (
     "no_vdb string, no_schema string, no_tabela string, no_usuario string,"
@@ -28,7 +37,8 @@ class LoadInfo:
 
     def save(self, table: str, load_type: str, row_count: int) -> None:
         """One row per load, like LoadInfo.save (load_info.py:82-103)."""
-        row = self.spark.createDataFrame(
+        row = local_rows(
+            self.spark,
             [(self.vdb, self.schema, table, getpass.getuser(), load_type, row_count)],
             LOG_SCHEMA,
         ).withColumn("dt_consumo", F.current_timestamp())

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fastetl_spark.io.readers import read_table
+from fastetl_spark.io.writers import local_rows, read_parquet_if_exists
 from fastetl_spark.registry import query
 
 
@@ -85,15 +86,9 @@ class WatermarkStore:
         an upgrade never breaks existing sync state: pre-upgrade rows
         order by updated_at alone and parse as str (the old behavior).
         """
-        from pyspark.errors import AnalysisException
-
-        try:
-            state = self.spark.read.option("mergeSchema", "true").parquet(self.path)
-        except AnalysisException as e:
-            msg = str(e)
-            if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-                return None
-            raise
+        state = read_parquet_if_exists(self.spark, self.path, mergeSchema="true")
+        if state is None:
+            return None
         cols = set(state.columns)
         if "seq" not in cols:
             state = state.withColumn("seq", F.lit(0).cast("long"))
@@ -112,11 +107,12 @@ class WatermarkStore:
     def set(self, table: str, value) -> None:
         import time
 
-        row = self.spark.createDataFrame(
+        row = local_rows(
+            self.spark,
             [(table, str(value), _watermark_type(value), time.time_ns())],
             "table_name string, watermark_value string, value_type string, seq long",
         ).withColumn("updated_at", F.current_timestamp())
-        row.write.mode("append").parquet(self.path)
+        row.coalesce(1).write.mode("append").parquet(self.path)
 
 
 def _watermark_type(value) -> str:

@@ -392,6 +392,88 @@ def test_watermark_store_reads_pre_upgrade_schema(spark, tmp_path):
     assert store.get("t1") == 42
 
 
+def _parquet_files(path) -> list:
+    return sorted(path.glob("*.parquet")) if path.exists() else []
+
+
+def _capture_written_plans(monkeypatch) -> list[str]:
+    """Executed plans of every frame written through DataFrameWriter.parquet."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    plans: list[str] = []
+    original = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        plans.append(self._df._jdf.queryExecution().executedPlan().toString())
+        return original(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    return plans
+
+
+def test_control_rows_plan_without_python_rdd(spark, tmp_path, monkeypatch):
+    """The load-log and watermark rows are driver-built Arrow tables: they
+    plan as a LocalTableScan, never a pickled Python RDD (Scan ExistingRDD)
+    that would start Python workers to append one row."""
+    from fastetl_spark.operators.sync import WatermarkStore
+
+    plans = _capture_written_plans(monkeypatch)
+    LoadInfo(spark, str(tmp_path / "log")).save("t", "full", 3)
+    WatermarkStore(spark, str(tmp_path / "wm")).set("t", 7)
+    assert len(plans) == 2
+    for plan in plans:
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+
+def test_control_rows_read_over_old_style_rows(spark, tmp_path):
+    """A directory holding a row written the old way (createDataFrame over a
+    Python list) plus new rows reads back with the same schema and
+    nullability, and the latest watermark still wins. Each save/set
+    appends exactly one parquet file."""
+    import getpass
+    import time
+
+    import pyarrow.parquet as pq
+
+    from fastetl_spark.meta.load_info import LOG_SCHEMA
+    from fastetl_spark.operators.sync import WatermarkStore
+
+    log_dir, wm_dir = tmp_path / "log", tmp_path / "wm"
+    spark.createDataFrame(
+        [("spark", "default", "t", getpass.getuser(), "full", 5)], LOG_SCHEMA
+    ).withColumn("dt_consumo", F.current_timestamp()).coalesce(1).write.mode(
+        "append"
+    ).parquet(str(log_dir))
+    spark.createDataFrame(
+        [("t", "5", "int", time.time_ns())],
+        "table_name string, watermark_value string, value_type string, seq long",
+    ).withColumn("updated_at", F.current_timestamp()).coalesce(1).write.mode(
+        "append"
+    ).parquet(str(wm_dir))
+    old_files = {d: _parquet_files(d) for d in (log_dir, wm_dir)}
+    old_schema = {d: spark.read.parquet(str(d)).schema for d in (log_dir, wm_dir)}
+
+    log = LoadInfo(spark, str(log_dir))
+    store = WatermarkStore(spark, str(wm_dir))
+    for i in (1, 2):
+        log.save("t", "incremental", i)
+        store.set("t", 5 + i)
+        for d in (log_dir, wm_dir):
+            assert len(_parquet_files(d)) == len(old_files[d]) + i
+    assert store.get("t") == 7
+
+    assert sorted(r.qt_linhas for r in log.read().collect()) == [1, 2, 5]
+    for d in (log_dir, wm_dir):
+        got = spark.read.parquet(str(d)).schema
+        assert got.simpleString() == old_schema[d].simpleString()
+        assert [f.nullable for f in got.fields] == [
+            f.nullable for f in old_schema[d].fields
+        ]
+        # the files themselves agree, field for field, nullability included
+        footers = {pq.read_schema(f).remove_metadata() for f in _parquet_files(d)}
+        assert footers == {pq.read_schema(old_files[d][0]).remove_metadata()}
+
+
 def test_reflection_ddl_roundtrip_postgresql():
     """Schema -> CREATE TABLE -> parse back: equal under the type
     mapping (reference create_table.py:296-340 reflection round trip)."""
