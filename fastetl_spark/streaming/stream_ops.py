@@ -1,20 +1,24 @@
 """Structured Streaming operators (SURVEY §2.10 extension — the
 reference has no streaming surface; its incremental sync is batch CDC).
 
-Components:
-- read_events_stream: file-source stream with the events schema
-- windowed_event_counts: tumbling-window agg with watermark
-- sessionized_counts: session_window agg (30-min gap)
-- dedup_stream: watermark + dropDuplicates on the event key
-- foreach_batch_merge: streaming upsert sink — every micro-batch MERGEs
-  into a parquet destination via the same merge_upsert used in batch
-  (§2.9 made continuous). With Delta this would be MERGE INTO; the
-  parquet rewrite keeps the engine dependency-free.
+Public surface: the file-source stream (read_events_stream), the
+stateful window/session/dedup/join transforms, the foreach_batch_*
+sink builders (merge, agg_maintain, ann_ingest, quarantine,
+cdc_apply; each returns its started StreamingQuery) and the
+registered streaming gates, which run real availableNow streams
+under the DuckDB oracle gate.
 
-Scale notes: state stores back the window/session/dedup operators —
-watermarks bound state size; foreachBatch merge rewrites only with
-AQE-planned joins. All sinks tested with trigger(availableNow=True)
-for deterministic batch-equivalence.
+Every gated micro-batch goes through three private helpers:
+- _stage_slices: lands a frame as 3 single-file slices and returns the
+  maxFilesPerTrigger=1 file stream over them, so batch boundaries come
+  from the slices (3 data batches, then availableNow's final no-data
+  batch), never from partitioning;
+- _start_available_now / _drain: the one availableNow start (into a
+  foreachBatch body or a named memory sink) and the one blocking
+  drain, which pins the state-partition count and returns the
+  finished StreamingQuery (its recentProgress holds the batches);
+- _once_per_batch: the commit-marker guard around a foreachBatch body
+  (skip a redelivered batch_id, publish, then write the marker).
 """
 
 from __future__ import annotations
@@ -24,6 +28,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 
 from fastetl_spark.registry import query
 
@@ -37,6 +42,140 @@ EVENTS_SCHEMA = T.StructType(
         T.StructField("props", T.StringType()),
     ]
 )
+
+
+# --- micro-batch harness: slice replay, availableNow drain, commit guard ---
+
+#: State-store partition count for the GATED availableNow fixtures.
+#: Streaming state partitioning is pinned at the first micro-batch from
+#: spark.sql.shuffle.partitions; at fixture scale (<= a few hundred
+#: thousand rows) the per-partition state-store overhead dominates the
+#: wall — 32 partitions x 4 batches x several stores per side is
+#: hundreds of tiny delta files (measured on the stream-stream join
+#: gate at sf0.1: 15.6 s -> 6.7 s by dropping to 8, identical output).
+#: Production streams size this to load (RUNBOOK streaming notes);
+#: semantics are partition-invariant — batch boundaries come from
+#: maxFilesPerTrigger, not from this.
+_GATE_STATE_PARTITIONS = 8
+
+
+@contextmanager
+def _pinned_state(spark: SparkSession):
+    """Pin the fixture-sized state-partition count (see
+    _GATE_STATE_PARTITIONS) for the duration of a gated drain — the
+    stateful operators and the per-batch sink writes alike — restoring
+    the session conf after, also when the drain raises.
+
+    The pin mutates the SESSION-global shuffle-partition conf, which
+    assumes the gated drains run sequentially on the session (they do:
+    the registry executes one query function at a time, and each drain
+    blocks until its query terminates). A nested or overlapping pin is
+    made harmless rather than silently restoring out of order: when the
+    conf is already at the pinned value, the inner pin is a no-op and
+    the outer pin alone restores."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    if old == str(_GATE_STATE_PARTITIONS):
+        yield  # already pinned by an enclosing drain — its exit restores
+        return
+    spark.conf.set(key, str(_GATE_STATE_PARTITIONS))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _start_available_now(
+    df: DataFrame, sink, mode: str | None = None, checkpoint: str | None = None
+) -> StreamingQuery:
+    """Start `df` as an availableNow query: every file present at start
+    is consumed, then a final no-data batch, then the query stops.
+    `sink` is a foreachBatch body, or a str naming a memory-sink table;
+    `mode` and `checkpoint` are set only when given (Spark's defaults
+    otherwise: append mode, a temporary checkpoint)."""
+    w = df.writeStream
+    if isinstance(sink, str):
+        w = w.format("memory").queryName(sink)
+    else:
+        w = w.foreachBatch(sink)
+    if mode is not None:
+        w = w.outputMode(mode)
+    if checkpoint is not None:
+        w = w.option("checkpointLocation", checkpoint)
+    return w.trigger(availableNow=True).start()
+
+
+def _drain(spark: SparkSession, start) -> StreamingQuery:
+    """Run `start()` — a thunk that starts an availableNow query — to
+    completion under the pinned state-partition count and return the
+    finished StreamingQuery (its recentProgress holds one record per
+    micro-batch). A failed batch raises here, after the pin restores."""
+    with _pinned_state(spark):
+        q = start()
+        q.awaitTermination()
+    return q
+
+
+def _drain_to_memory(df: DataFrame, prefix: str, mode: str) -> DataFrame:
+    """Drain a streaming frame into a fresh memory sink and return the
+    drained table."""
+    import uuid
+
+    spark = df.sparkSession
+    name = prefix + uuid.uuid4().hex[:8]
+    _drain(spark, lambda: _start_available_now(df, name, mode))
+    return spark.table(name)
+
+
+def _once_per_batch(dest_path: str, body):
+    """Wrap a foreachBatch body in the commit-marker guard: a batch_id
+    whose marker ``<dest>.__commits__/<batch_id>`` exists is skipped (a
+    redelivered micro-batch — Structured Streaming replays the last
+    batch after a restart that crashed between sink write and
+    checkpoint commit); otherwise `body` runs and the marker is written
+    AFTER it publishes. A crash between publish and marker replays the
+    body, so every guarded body must converge when re-run."""
+    from fastetl_spark.io.fsutil import hadoop_fs, write_text_file
+
+    commits_dir = dest_path.rstrip("/") + ".__commits__"
+
+    def guarded(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        marker = f"{commits_dir}/{int(batch_id)}"
+        fs, path_cls = hadoop_fs(spark, dest_path)
+        if fs.exists(path_cls(marker)):
+            return  # redelivered batch: already published and committed
+        body(batch_df, batch_id)
+        write_text_file(spark, marker, "")  # commit marker, after publish
+
+    return guarded
+
+
+def _stage_slices(
+    df: DataFrame, root: str, split_expr, schema: T.StructType | None = None
+) -> DataFrame:
+    """Land a frame as 3 single-file parquet slices in ``<root>/in``
+    (slice i holds the rows where `split_expr` == i) and return the
+    maxFilesPerTrigger=1 file stream over them, read with `schema`
+    (default ``df.schema``): 3 micro-batches, one per slice, in the
+    order they land. Local-FS only (scratch fixtures for the gated
+    queries)."""
+    import glob as _glob
+    import os
+    import shutil
+
+    in_dir = f"{root}/in"
+    os.makedirs(in_dir, exist_ok=True)
+    for i in range(3):
+        stage = f"{root}/stage_{i}"
+        df.filter(split_expr == i).coalesce(1).write.mode("overwrite").parquet(stage)
+        part = _glob.glob(f"{stage}/part-*.parquet")[0]
+        shutil.copy(part, f"{in_dir}/slice_{i}.parquet")
+    return (
+        df.sparkSession.readStream.schema(schema or df.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(in_dir)
+    )
 
 
 def read_events_stream(spark: SparkSession, path: str, max_files_per_trigger: int = 10) -> DataFrame:
@@ -90,27 +229,21 @@ def make_merge_batch(
     """The foreachBatch merge body, as a standalone callable so batch
     redelivery can be tested directly (and reused outside a stream).
 
-    Redelivery contract: a committed batch_id is recorded as a marker
-    file AFTER its merge publishes (``dest.__commits__/<batch_id>``), so
-    a redelivered micro-batch — Structured Streaming replays the last
-    batch after any restart that crashed between sink write and
-    checkpoint commit — is skipped instead of re-merged. The marker is
-    written last: a crash between merge and marker re-applies the merge
-    on replay, which is safe because the merge is idempotent (keyed
-    upsert), so the destination converges either way — effectively-once
-    on top of the at-least-once trigger. Delta destinations skip the
-    marker dance: the MERGE itself is transactional.
+    Redelivery contract: the body runs under _once_per_batch, so a
+    redelivered micro-batch is skipped instead of re-merged. A crash
+    between merge and marker re-applies the merge on replay, which is
+    safe because the merge is idempotent (keyed upsert), so the
+    destination converges either way — effectively-once on top of the
+    at-least-once trigger. Delta destinations skip the marker dance:
+    the MERGE itself is transactional.
     """
     from fastetl_spark.io.bucketed import (
         partial_merge,
         read_bucket_spec,
         write_bucketed,
     )
-    from fastetl_spark.io.fsutil import hadoop_fs, write_text_file
     from fastetl_spark.io.writers import atomic_overwrite, read_parquet_if_exists
     from fastetl_spark.operators.sync import merge_upsert
-
-    commits_dir = dest_path.rstrip("/") + ".__commits__"
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -120,10 +253,6 @@ def make_merge_batch(
 
             merge_into_delta(spark, dest_path, batch, keys)
             return
-        marker = f"{commits_dir}/{int(batch_id)}"
-        fs, path_cls = hadoop_fs(spark, dest_path)
-        if fs.exists(path_cls(marker)):
-            return  # redelivered batch: already merged and committed
         # Absence is detected explicitly; a read/merge *error* propagates
         # and fails the batch instead of silently overwriting the
         # destination with only the current micro-batch.
@@ -144,9 +273,8 @@ def make_merge_batch(
             # swap keeps readers and crash-recovery from ever seeing a
             # truncated destination.
             atomic_overwrite(merged, dest_path)
-        write_text_file(spark, marker, "")  # commit marker, after publish
 
-    return merge_batch
+    return merge_batch if fmt == "delta" else _once_per_batch(dest_path, merge_batch)
 
 
 def foreach_batch_merge(
@@ -178,11 +306,8 @@ def foreach_batch_merge(
 
         require_delta()  # fail at wiring time, not on the first batch
 
-    return (
-        stream.writeStream.foreachBatch(make_merge_batch(dest_path, keys, n_buckets, fmt))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _start_available_now(
+        stream, make_merge_batch(dest_path, keys, n_buckets, fmt), checkpoint=checkpoint_dir
     )
 
 
@@ -255,12 +380,7 @@ def foreach_batch_agg_maintain(
         )
         atomic_overwrite(merged, dest_path)
 
-    return (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_available_now(stream, merge_batch, checkpoint=checkpoint_dir)
 
 
 def foreach_batch_ann_ingest(
@@ -288,12 +408,7 @@ def foreach_batch_ann_ingest(
             return
         append_to_ivf_index(batch_df, index_path)
 
-    return (
-        stream.writeStream.foreachBatch(ingest_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_available_now(stream, ingest_batch, checkpoint=checkpoint_dir)
 
 
 def foreach_batch_quarantine(
@@ -320,12 +435,7 @@ def foreach_batch_quarantine(
         finally:
             batch_df.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(split_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_available_now(stream, split_batch, checkpoint=checkpoint_dir)
 
 
 # --- driver-checkable streaming query ------------------------------------
@@ -374,72 +484,6 @@ def _gated_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     if ts_is_nanos:
         raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return raw
-
-
-#: State-store partition count for the GATED availableNow fixtures.
-#: Streaming state partitioning is pinned at the first micro-batch from
-#: spark.sql.shuffle.partitions; at fixture scale (<= a few hundred
-#: thousand rows) the per-partition state-store overhead dominates the
-#: wall — 32 partitions x 4 batches x several stores per side is
-#: hundreds of tiny delta files (measured on the stream-stream join
-#: gate at sf0.1: 15.6 s -> 6.7 s by dropping to 8, identical output).
-#: Production streams size this to load (RUNBOOK streaming notes);
-#: semantics are partition-invariant — batch boundaries come from
-#: maxFilesPerTrigger, not from this.
-_GATE_STATE_PARTITIONS = 8
-
-
-@contextmanager
-def _pinned_state(spark: SparkSession):
-    """Pin the fixture-sized state-partition count for the duration of
-    a gated streaming drain (see _GATE_STATE_PARTITIONS), restoring the
-    session conf after.  Used by BOTH drain paths — the memory-sink
-    gates (_drain_to_memory) and the foreachBatch gates, which
-    previously ran their stateful aggregations and per-batch sink
-    writes at the session's 32 partitions (r14: the same hundreds of
-    tiny state-store delta files the r13 pin removed from the
-    memory-sink gates; semantics are partition-invariant — batch
-    boundaries come from maxFilesPerTrigger, not from this).
-
-    The pin mutates the SESSION-global shuffle-partition conf for the
-    drain's duration, which assumes the gated drains run sequentially
-    on the session (they do: the registry executes one query function
-    at a time, and each drain blocks on awaitTermination). A nested or
-    overlapping pin is made harmless rather than silently restoring
-    out of order: when the conf is already at the pinned value, the
-    inner pin is a no-op and the outer pin alone restores (r14 ADVICE
-    #2)."""
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    if old == str(_GATE_STATE_PARTITIONS):
-        yield  # already pinned by an enclosing drain — its exit restores
-        return
-    spark.conf.set(key, str(_GATE_STATE_PARTITIONS))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
-
-
-def _drain_to_memory(df: DataFrame, prefix: str, mode: str) -> DataFrame:
-    """Run a streaming frame to completion (availableNow) into a memory
-    sink and return the drained table.  Pins the fixture-sized
-    state-partition count for the duration of the run (see
-    _GATE_STATE_PARTITIONS), restoring the session conf after."""
-    import uuid
-
-    spark = df.sparkSession
-    name = prefix + uuid.uuid4().hex[:8]
-    with _pinned_state(spark):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
 
 
 @query("streaming_tumbling_counts", _STREAM_TUMBLING_SQL)
@@ -592,22 +636,6 @@ def streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- foreachBatch sinks under the gate ------------------------------------
 
 
-def _stage_slices(df: DataFrame, root: str, in_dir: str, split_expr) -> None:
-    """Land a frame as 3 single-file parquet slices in `in_dir` so a
-    maxFilesPerTrigger=1 file source replays it as 3 micro-batches.
-    Local-FS only (scratch fixtures for the gated queries)."""
-    import glob as _glob
-    import os
-    import shutil
-
-    os.makedirs(in_dir, exist_ok=True)
-    for i in range(3):
-        stage = f"{root}/stage_{i}"
-        df.filter(split_expr == i).coalesce(1).write.mode("overwrite").parquet(stage)
-        part = _glob.glob(f"{stage}/part-*.parquet")[0]
-        shutil.copy(part, f"{in_dir}/slice_{i}.parquet")
-
-
 def _scratch_root(sf_dir: str, kind: str) -> str:
     import hashlib
     import shutil
@@ -649,7 +677,7 @@ def streaming_upsert_sync_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fastetl_spark.io.readers import read_table
 
     root = _scratch_root(sf_dir, "stream_sync")
-    in_dir, dest, ckpt = f"{root}/in", f"{root}/dest", f"{root}/ckpt"
+    dest, ckpt = f"{root}/dest", f"{root}/ckpt"
     e = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id", "event_type").orderBy(
         F.col("ts").desc(), F.col("event_id").desc()
@@ -657,17 +685,9 @@ def streaming_upsert_sync_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     winners = (
         e.withColumn("__rn", F.row_number().over(w)).filter("__rn = 1").drop("__rn")
     )
-    _stage_slices(winners, root, in_dir, F.col("user_id") % 3)
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    with _pinned_state(spark):
-        q = foreach_batch_merge(
-            stream, dest, ["user_id", "event_type"], ckpt, n_buckets=8
-        )
-        q.awaitTermination()
+    stream = _stage_slices(winners, root, F.col("user_id") % 3, EVENTS_SCHEMA)
+    keys = ["user_id", "event_type"]
+    _drain(spark, lambda: foreach_batch_merge(stream, dest, keys, ckpt, n_buckets=8))
     return read_bucketed(spark, dest).select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
@@ -701,28 +721,18 @@ def streaming_quarantine_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fastetl_spark.plans.quarantine import FAILED_COL
 
     root = _scratch_root(sf_dir, "stream_quar")
-    in_dir, valid_p, reject_p, ckpt = (
-        f"{root}/in",
-        f"{root}/valid",
-        f"{root}/rej",
-        f"{root}/ckpt",
-    )
+    valid_p, reject_p, ckpt = f"{root}/valid", f"{root}/rej", f"{root}/ckpt"
     from fastetl_spark.io.readers import read_table
 
     e = read_table(spark, sf_dir, "events")
-    _stage_slices(e, root, in_dir, F.col("event_id") % 3)
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream = _stage_slices(e, root, F.col("event_id") % 3, EVENTS_SCHEMA)
     rules = [
         ("value_pos", F.col("value") > 0.0),
         ("type_known", F.col("event_type").isin("click", "view", "purchase", "signup")),
     ]
-    with _pinned_state(spark):
-        q = foreach_batch_quarantine(stream, rules, valid_p, reject_p, ckpt)
-        q.awaitTermination()
+    _drain(
+        spark, lambda: foreach_batch_quarantine(stream, rules, valid_p, reject_p, ckpt)
+    )
     valid = spark.read.parquet(valid_p).select(
         "event_id",
         F.lit(True).alias("is_valid"),
@@ -756,17 +766,10 @@ def streaming_agg_maintain_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fastetl_spark.io.readers import read_table
 
     root = _scratch_root(sf_dir, "stream_agg")
-    in_dir, dest, ckpt = f"{root}/in", f"{root}/dest", f"{root}/ckpt"
+    dest, ckpt = f"{root}/dest", f"{root}/ckpt"
     e = read_table(spark, sf_dir, "events")
-    _stage_slices(e, root, in_dir, F.col("event_id") % 3)
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    with _pinned_state(spark):
-        q = foreach_batch_agg_maintain(stream, dest, ckpt)
-        q.awaitTermination()
+    stream = _stage_slices(e, root, F.col("event_id") % 3, EVENTS_SCHEMA)
+    _drain(spark, lambda: foreach_batch_agg_maintain(stream, dest, ckpt))
     agg = spark.read.parquet(dest)
     return agg.select(
         "hour",
@@ -788,16 +791,9 @@ def make_cdc_batch(dest_path: str, keys: list[str], op_col: str = "op"):
     write_bucketed first (a CDC feed has no meaningful 'first full
     load' batch)."""
     from fastetl_spark.io.bucketed import partial_merge, read_bucket_spec
-    from fastetl_spark.io.fsutil import hadoop_fs, write_text_file
-
-    commits_dir = dest_path.rstrip("/") + ".__commits__"
 
     def cdc_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        marker = f"{commits_dir}/{int(batch_id)}"
-        fs, path_cls = hadoop_fs(spark, dest_path)
-        if fs.exists(path_cls(marker)):
-            return  # redelivered batch: already applied and committed
         if read_bucket_spec(spark, dest_path) is None:
             raise ValueError(
                 f"{dest_path} is not an initialized bucketed destination; "
@@ -807,9 +803,8 @@ def make_cdc_batch(dest_path: str, keys: list[str], op_col: str = "op"):
         ups = batch.filter(F.col(op_col) != "D").drop(op_col)
         dels = batch.filter(F.col(op_col) == "D").select(*keys)
         partial_merge(spark, dest_path, ups, deleted_keys=dels)
-        write_text_file(spark, marker, "")  # commit marker, after publish
 
-    return cdc_batch
+    return _once_per_batch(dest_path, cdc_batch)
 
 
 def foreach_batch_cdc_apply(
@@ -818,11 +813,8 @@ def foreach_batch_cdc_apply(
 ):
     """Continuous CDC consumption: upserts + deletes per micro-batch
     into a bucketed destination, O(|batch|) per trigger."""
-    return (
-        stream.writeStream.foreachBatch(make_cdc_batch(dest_path, keys, op_col))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _start_available_now(
+        stream, make_cdc_batch(dest_path, keys, op_col), checkpoint=checkpoint_dir
     )
 
 
@@ -855,7 +847,7 @@ def streaming_cdc_apply_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fastetl_spark.io.readers import read_table
 
     root = _scratch_root(sf_dir, "stream_cdc")
-    in_dir, dest, ckpt = f"{root}/in", f"{root}/dest", f"{root}/ckpt"
+    dest, ckpt = f"{root}/dest", f"{root}/ckpt"
     e = read_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
@@ -874,15 +866,8 @@ def streaming_cdc_apply_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             e.filter(F.col("event_id") % 5 == 2).withColumn("op", F.lit("D"))
         )
     )
-    _stage_slices(feed, root, in_dir, F.col("event_id") % 3)
-    stream = (
-        spark.readStream.schema(feed.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    with _pinned_state(spark):
-        q = foreach_batch_cdc_apply(stream, dest, ["event_id"], ckpt)
-        q.awaitTermination()
+    stream = _stage_slices(feed, root, F.col("event_id") % 3)
+    _drain(spark, lambda: foreach_batch_cdc_apply(stream, dest, ["event_id"], ckpt))
     return read_bucketed(spark, dest).select(
         "event_id", "user_id", "event_type", "value"
     )
@@ -937,21 +922,10 @@ def make_view_delta_batch(dest_path: str, dim: DataFrame, on: str):
     term — the only term a fact-only stream produces). A per-batch
     commit marker makes redelivered batches no-ops, so the append-only
     view never double-counts a delta."""
-    from fastetl_spark.io.fsutil import hadoop_fs, write_text_file
-
-    commits_dir = dest_path.rstrip("/") + ".__commits__"
-
     def view_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        marker = f"{commits_dir}/{int(batch_id)}"
-        fs, path_cls = hadoop_fs(spark, dest_path)
-        if fs.exists(path_cls(marker)):
-            return  # redelivered batch: delta already appended
-        delta = batch_df.join(F.broadcast(dim), on)
-        delta.write.mode("append").parquet(dest_path)
-        write_text_file(spark, marker, "")
+        batch_df.join(F.broadcast(dim), on).write.mode("append").parquet(dest_path)
 
-    return view_batch
+    return _once_per_batch(dest_path, view_batch)
 
 
 _STREAM_IVM_SQL = """
@@ -976,7 +950,7 @@ def streaming_ivm_join_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fastetl_spark.operators.ivm import _ORD_CUTOFF
 
     root = _scratch_root(sf_dir, "stream_ivm")
-    in_dir, dest, ckpt = f"{root}/in", f"{root}/dest", f"{root}/ckpt"
+    dest, ckpt = f"{root}/dest", f"{root}/ckpt"
     o = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"
     )
@@ -988,22 +962,9 @@ def streaming_ivm_join_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     inc = o.filter(F.col("o_orderdate") >= cutoff).drop("o_orderdate")
     # initialize the view with the base join (one-time backfill)
     base.join(F.broadcast(dim), "o_custkey").write.mode("overwrite").parquet(dest)
-    _stage_slices(inc, root, in_dir, F.col("o_orderkey") % 3)
-    stream = (
-        spark.readStream.schema(inc.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    with _pinned_state(spark):
-        q = (
-            stream.writeStream.foreachBatch(
-                make_view_delta_batch(dest, dim, "o_custkey")
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    stream = _stage_slices(inc, root, F.col("o_orderkey") % 3)
+    sink = make_view_delta_batch(dest, dim, "o_custkey")
+    _drain(spark, lambda: _start_available_now(stream, sink, checkpoint=ckpt))
     return spark.read.parquet(dest).select(
         "o_orderkey", "o_custkey", "o_totalprice", "c_mktsegment"
     )
@@ -1159,22 +1120,11 @@ def streaming_posting_index_state(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
     root = _scratch_root(sf_dir, "stream_posting")
-    in_dir, dest, ckpt = f"{root}/in", f"{root}/dest", f"{root}/ckpt"
+    dest, ckpt = f"{root}/dest", f"{root}/ckpt"
     d = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    _stage_slices(d, root, in_dir, F.col("doc_id") % 3)
-    stream = (
-        spark.readStream.schema(d.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    with _pinned_state(spark):
-        q = (
-            stream.writeStream.foreachBatch(make_posting_batch(dest))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    stream = _stage_slices(d, root, F.col("doc_id") % 3)
+    sink = make_posting_batch(dest)
+    _drain(spark, lambda: _start_available_now(stream, sink, checkpoint=ckpt))
     queries = spark.createDataFrame(
         [(qid, list(terms)) for qid, terms in _BM25_QUERY_SET],
         "query_id int, terms array<string>",
@@ -1422,15 +1372,7 @@ def streaming_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         psi_terms_from_counts(full).write.mode("overwrite").parquet(dest)
 
     cur = _binned_current_stream(spark, sf_dir, mid, bounds)
-    with _pinned_state(spark):
-        q = (
-            cur.writeStream.foreachBatch(psi_batch)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, lambda: _start_available_now(cur, psi_batch, "complete", ckpt))
     return spark.read.parquet(dest).orderBy("event_type", "bin")
 
 
@@ -1471,16 +1413,10 @@ def streaming_media_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     root = _scratch_root(sf_dir, "stream_media")
-    in_dir = f"{root}/in"
     media = read_table(spark, sf_dir, "documents").select(
         "doc_id", _stamped_payload().alias("payload")
     )
-    _stage_slices(media, root, in_dir, F.col("doc_id") % 3)
-    stream = (
-        spark.readStream.schema(media.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream = _stage_slices(media, root, F.col("doc_id") % 3)
     prof = payload_byte_profile_pandas(stream)
     return _drain_to_memory(prof, "st_media_", "append").orderBy("doc_id")
 
@@ -1571,23 +1507,13 @@ def make_batch_partition_sink(dest_path: str, transform=None):
     on redelivery): every batch OVERWRITES its own partition, so
     re-running a batch — marker present or not — converges to the same
     files; the marker only short-circuits the rewrite."""
-    from fastetl_spark.io.fsutil import hadoop_fs, write_text_file
-
-    commits_dir = dest_path.rstrip("/") + ".__commits__"
-
     def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
-        bspark = batch_df.sparkSession
-        marker = f"{commits_dir}/{int(batch_id)}"
-        fs, path_cls = hadoop_fs(bspark, dest_path)
-        if fs.exists(path_cls(marker)):
-            return  # redelivered batch: partition already written
         out = transform(batch_df) if transform is not None else batch_df
         out.write.mode("overwrite").parquet(
             f"{dest_path.rstrip('/')}/__batch={int(batch_id)}"
         )
-        write_text_file(bspark, marker, "")
 
-    return sink_batch
+    return _once_per_batch(dest_path, sink_batch)
 
 
 @query("streaming_late_data_windows", _stream_late_sql())
@@ -1602,7 +1528,7 @@ def streaming_late_data_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fastetl_spark.io.readers import read_table
 
     root = _scratch_root(sf_dir, "stream_late")
-    in_dir, dest, ckpt = f"{root}/in", f"{root}/dest", f"{root}/ckpt"
+    dest, ckpt = f"{root}/dest", f"{root}/ckpt"
     ev = read_table(spark, sf_dir, "events").select(
         "event_type",
         F.date_trunc("second", F.col("ts").cast("timestamp")).alias("tss"),
@@ -1616,12 +1542,7 @@ def streaming_late_data_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("tss") >= F.lit(_LATE_CUT_HI).cast("timestamp"), 0)
         .otherwise(1)
     )
-    _stage_slices(ev, root, in_dir, slice_no)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream = _stage_slices(ev, root, slice_no)
     agg = (
         stream.withWatermark("tss", f"{_LATE_WM_DAYS} days")
         .groupBy(F.window("tss", "1 day").alias("w"), "event_type")
@@ -1632,16 +1553,8 @@ def streaming_late_data_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-
-    with _pinned_state(spark):
-        q = (
-            agg.writeStream.foreachBatch(make_batch_partition_sink(dest))
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    sink = make_batch_partition_sink(dest)
+    _drain(spark, lambda: _start_available_now(agg, sink, "update", ckpt))
     # counts only grow in state, so MAX across the per-batch update
     # emissions is the final value per key
     return (
@@ -1688,7 +1601,6 @@ def streaming_audio_qa(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     root = _scratch_root(sf_dir, "stream_audioqa")
-    in_dir = f"{root}/in"
     d = read_table(spark, sf_dir, "documents")
     enc = "encode(text, 'UTF-8')"
     data_hx = _wav_qa_data_hx(enc)
@@ -1704,12 +1616,7 @@ def streaming_audio_qa(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("payload"),
     )
-    _stage_slices(media, root, in_dir, F.col("doc_id") % 3)
-    stream = (
-        spark.readStream.schema(media.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream = _stage_slices(media, root, F.col("doc_id") % 3)
     qa = wav_audio_qa_pandas(stream, dc_num=1, dc_den=2)
     return _drain_to_memory(qa, "st_audioqa_", "append").orderBy(
         "doc_id", "channel"
@@ -1744,14 +1651,9 @@ def streaming_auc_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fastetl_spark.operators.evaluation import auc_from_score_counts
 
     root = _scratch_root(sf_dir, "stream_auc")
-    in_dir, dest, ckpt = f"{root}/in", f"{root}/dest", f"{root}/ckpt"
+    dest, ckpt = f"{root}/dest", f"{root}/ckpt"
     ev = read_table(spark, sf_dir, "events")
-    _stage_slices(ev, root, in_dir, F.col("event_id") % 3)
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream = _stage_slices(ev, root, F.col("event_id") % 3, EVENTS_SCHEMA)
     counts = (
         stream.filter(F.col("value").isNotNull() & ~F.isnan("value"))
         .groupBy("event_type", "value")
@@ -1766,15 +1668,7 @@ def streaming_auc_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             batch_df, "event_type", "value", small_support=True
         ).write.mode("overwrite").parquet(dest)
 
-    with _pinned_state(spark):
-        q = (
-            counts.writeStream.foreachBatch(auc_batch)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, lambda: _start_available_now(counts, auc_batch, "complete", ckpt))
     return spark.read.parquet(dest)
 
 
@@ -1842,7 +1736,6 @@ def streaming_late_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fastetl_spark.io.readers import read_table
 
     root = _scratch_root(sf_dir, "stream_late_dedup")
-    in_dir, ckpt = f"{root}/in", f"{root}/ckpt"
     ev = read_table(spark, sf_dir, "events").select(
         "event_type",
         F.date_trunc("second", F.col("ts").cast("timestamp")).alias("tss"),
@@ -1866,12 +1759,7 @@ def streaming_late_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("b") < 2) & (F.col("event_id") % _LDD_REDELIVER_MOD == 0)
     ).withColumn("b", F.lit(2))
     staged = base.unionByName(redelivered).select("event_type", "tss", "b")
-    _stage_slices(staged, root, in_dir, F.col("b"))
-    stream = (
-        spark.readStream.schema(staged.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream = _stage_slices(staged, root, F.col("b"))
     dd = (
         stream.withWatermark("tss", f"{_LDD_WM_DAYS} days")
         .dropDuplicates(["event_type", "tss"])
@@ -2065,7 +1953,6 @@ def streaming_session_merge_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fastetl_spark.io.readers import read_table
 
     root = _scratch_root(sf_dir, "stream_session_merge")
-    in_dir = f"{root}/in"
     ev = read_table(spark, sf_dir, "events").select(
         (F.col("user_id") % _SML_SHARD_MOD).alias("shard"),
         F.date_trunc("second", F.col("ts").cast("timestamp")).alias("tss"),
@@ -2101,12 +1988,7 @@ def streaming_session_merge_late(spark: SparkSession, sf_dir: str) -> DataFrame:
             " late+on-time session at this SF — the late-merge path"
             " under test would not execute (widen the gap rule)"
         )
-    _stage_slices(ev, root, in_dir, slice_no)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream = _stage_slices(ev, root, slice_no)
     agg = (
         stream.withWatermark("tss", f"{_SML_WM_DAYS} days")
         .groupBy(
@@ -2208,7 +2090,6 @@ def streaming_join_late_attribution(spark: SparkSession, sf_dir: str) -> DataFra
     from fastetl_spark.io.readers import read_table
 
     root = _scratch_root(sf_dir, "stream_join_late")
-    in_dir = f"{root}/in"
     ev = read_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("click", "purchase")
     ).select(
@@ -2253,12 +2134,7 @@ def streaming_join_late_attribution(spark: SparkSession, sf_dir: str) -> DataFra
             " clicks or purchases entirely (widen the window)"
         )
     staged = ev.select("event_id", "user_id", "event_type", "tss")
-    _stage_slices(staged, root, in_dir, slice_no)
-    stream = (
-        spark.readStream.schema(staged.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream = _stage_slices(staged, root, slice_no)
     clicks = (
         stream.filter(F.col("event_type") == "click")
         .select(

@@ -321,6 +321,59 @@ def test_batch_partition_sink_redelivery_noop(spark, tmp_path):
     assert got == [("a", 1), ("b", 2)]
 
 
+def test_drain_pins_state_partitions_and_restores(spark, events_dir, tmp_path):
+    """_drain runs a foreachBatch body at the pinned state-partition
+    count and restores the session's own value afterwards — also when
+    the body raises, whose error must reach the caller. A nested pin is
+    a no-op: only the outer pin restores."""
+    from fastetl_spark.streaming.stream_ops import (
+        _GATE_STATE_PARTITIONS,
+        _drain,
+        _pinned_state,
+        _start_available_now,
+    )
+
+    key = "spark.sql.shuffle.partitions"
+    pinned = str(_GATE_STATE_PARTITIONS)
+    assert pinned == "8"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "5")  # differs from the pin, so a restore is visible
+    try:
+        seen = []
+
+        def body(batch_df, batch_id):
+            seen.append(batch_df.sparkSession.conf.get(key))
+
+        stream = read_events_stream(spark, events_dir, max_files_per_trigger=2)
+        q = _drain(
+            spark,
+            lambda: _start_available_now(stream, body, checkpoint=str(tmp_path / "ok")),
+        )
+        assert len(seen) == len(q.recentProgress) > 0
+        assert set(seen) == {pinned}
+        assert spark.conf.get(key) == "5"
+
+        def failing(batch_df, batch_id):
+            raise RuntimeError("batch body failed")
+
+        with pytest.raises(Exception, match="batch body failed"):
+            _drain(
+                spark,
+                lambda: _start_available_now(
+                    stream, failing, checkpoint=str(tmp_path / "bad")
+                ),
+            )
+        assert spark.conf.get(key) == "5"
+
+        with _pinned_state(spark):
+            with _pinned_state(spark):
+                assert spark.conf.get(key) == pinned
+            assert spark.conf.get(key) == pinned  # the inner exit did not restore
+        assert spark.conf.get(key) == "5"
+    finally:
+        spark.conf.set(key, before)
+
+
 @pytest.mark.slow  # full gate only: lag/boundary also pinned by the oracle gates (streaming_late_data_windows, streaming_tumbling_counts) and the invariant-property test above
 def test_watermark_two_stage_lag_and_boundary(spark, tmp_path):
     """Pin the Spark lateness semantics the 18th gate's oracle encodes

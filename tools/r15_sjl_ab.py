@@ -45,7 +45,6 @@ def old_streaming_join_late_attribution(spark, sf_dir):
     )
 
     root = _scratch_root(sf_dir, "stream_join_late")
-    in_dir = f"{root}/in"
     ev = read_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("click", "purchase")
     ).select(
@@ -93,12 +92,7 @@ def old_streaming_join_late_attribution(spark, sf_dir):
     ).count()
     assert cross > 0
     staged = base.select("event_id", "user_id", "event_type", "tss")
-    _stage_slices(staged, root, in_dir, slice_no)
-    stream = (
-        spark.readStream.schema(staged.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream = _stage_slices(staged, root, slice_no)
     clicks = (
         stream.filter(F.col("event_type") == "click")
         .select(
